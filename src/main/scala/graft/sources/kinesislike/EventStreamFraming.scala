@@ -244,6 +244,9 @@ object EventStreamFraming {
         throw new IllegalArgumentException(
           s"not a record line: ${line.take(80)}"))))
 
+  /** The message CRC a complete message carries in its last 4 bytes. */
+  def messageCrc(msg: Array[Byte]): Int = be32(msg, msg.length - 4)
+
   /** Decode one complete message: verify BOTH CRCs, parse the headers,
     * return (headers, payload). `msg` includes the prelude — exactly what
     * [[FrameDecoder]] yields. */
@@ -335,7 +338,7 @@ object EventStreamFraming {
   private val TimesRe = """"times"\s*:\s*(\d+)""".r
 
   /** Metadata-only demux of one decoded message — what the driver's
-    * per-stream-start shard scan ([[KinesisLikeLog.maxSeq]]/`isClosed`)
+    * shard metadata scan ([[KinesisLikeLog.maxSeq]]/`isClosed`)
     * needs and nothing more: the continuation sequence number (or the
     * null-continuation closed signal). [[decodeToEvent]] builds every
     * Record (Jackson tree, base64 strings, arrival decimals) just so the
@@ -464,9 +467,18 @@ object EventStreamFraming {
     * Records envelope (S12), and yields events in wire order
     * (initial-response skipped). This is the reader's input — cursor
     * logic operates per EVENT, mirroring handle_event's one
-    * resume-position advance per message. */
-  final class FramedEventSource(f: File) extends KinesisLikeLog.EventSource {
-    private val in      = new FileInputStream(f)
+    * resume-position advance per message. Reading starts at
+    * `startByte`, which must be a frame boundary (a
+    * [[KinesisLikeLog.seekOffset]]); one that is not fails on the first
+    * frame's prelude or CRC, never silently. */
+  final class FramedEventSource(f: File, startByte: Long = 0L)
+      extends KinesisLikeLog.EventSource {
+    private val in = new FileInputStream(f)
+    try {
+      require(startByte >= 0L && startByte <= in.getChannel.size(),
+        s"seek offset $startByte lies outside $f")
+      in.getChannel.position(startByte)
+    } catch { case t: Throwable => in.close(); throw t }
     private val decoder = new FrameDecoder
     private val chunk   = new Array[Byte](ChunkBytes)
     private val queue =

@@ -124,11 +124,16 @@ object KinesisLikeLog {
 
   /** Open a shard file with the EVENT decoder its extension names — the
     * dispatch point the executor reader uses (per-event cursor
-    * semantics, S12 envelope decode inside the framed tier). */
-  def openEvents(f: File): EventSource =
+    * semantics, S12 envelope decode inside the framed tier). A framed
+    * shard may start at `startByte`, a frame boundary from
+    * [[seekOffset]]; text shards always read from byte 0. */
+  def openEvents(f: File, startByte: Long = 0L): EventSource =
     if (f.getName.endsWith(FramedExtension))
-      new EventStreamFraming.FramedEventSource(f)
-    else new TextEventSource(f)
+      new EventStreamFraming.FramedEventSource(f, startByte)
+    else {
+      require(startByte == 0L, s"text shard $f cannot seek to byte $startByte")
+      new TextEventSource(f)
+    }
 
   /** Open a shard file as LINES — the ONE dispatch point between the
     * text and event-stream-framed encodings for every driver-side
@@ -256,8 +261,12 @@ object KinesisLikeLog {
   def shardId(f: File): String =
     f.getName.stripSuffix(FramedExtension).stripSuffix(".log")
 
-  def shardFile(dir: String, shardId: String): File =
-    new File(dir, s"$shardId.log")
+  /** The file holding `shardId` under `dir`: the framed `.elog` when it
+    * exists, else the text `.log`. */
+  def shardFile(dir: String, shardId: String): File = {
+    val framed = new File(dir, shardId + FramedExtension)
+    if (framed.exists()) framed else new File(dir, s"$shardId.log")
+  }
 
   /** Driver-side metadata scan (the analog of Kafka's listOffsets): fold
     * over a shard file (either encoding) without materializing it. */
@@ -277,20 +286,49 @@ object KinesisLikeLog {
 
   /** Driver-side shard metadata, cached by (mtime, length) so an
     * unchanged shard file costs O(1) per microbatch — the analog of
-    * Kafka's O(1) listOffsets metadata — instead of a full driver-side
-    * rescan per latestOffset() call. The log is append-only, so any
-    * append changes the length and invalidates the entry. */
+    * Kafka's O(1) listOffsets metadata. The log is append-only, so any
+    * append changes the length and misses the entry; for a framed shard
+    * the miss resumes the scan where the entry's [[ScanMark]] stopped,
+    * so per-batch driver work is O(appended bytes), not O(shard). */
   private final case class ShardMeta(
-      mtime: Long, length: Long, maxSeq: Long, closed: Boolean)
+      mtime: Long, length: Long, maxSeq: Long, closed: Boolean, mark: ScanMark)
+
+  /** Where a framed shard's metadata scan stopped, and its seek index:
+    *  - `end` is the byte just past the last complete frame, which starts
+    *    at `lastOff` (-1 when there is none) and carries message CRC
+    *    `lastCrc`; a later scan resumes at `end` only if that frame still
+    *    verifies;
+    *  - `offsets(i)` is the byte just past a Records event, at least
+    *    [[SeekStride]] bytes after the previous entry, and `conts(i)` the
+    *    highest continuation at or before it (ascending). Every record
+    *    before `offsets(i)` has a sequence number ≤ `conts(i)`.
+    * Text shards keep [[NoMark]]: they scan in full and read from byte 0. */
+  private final case class ScanMark(
+      end: Long, lastOff: Long, lastCrc: Int,
+      conts: Array[Long], offsets: Array[Long])
+  private val NoMark =
+    ScanMark(0L, -1L, 0, Array.emptyLongArray, Array.emptyLongArray)
+
+  /** Seek index spacing: a few KB of index per 10 MB of shard, and a
+    * seeking reader decodes at most ~64 KB (plus one event) of already
+    * delivered records before its cursor. */
+  private val SeekStride = 64L * 1024
+
   private val metaCache =
     new java.util.concurrent.ConcurrentHashMap[String, ShardMeta]()
 
-  /** Number of full metadata scans performed (test observability: an
-    * unchanged file must not re-scan). */
+  /** Number of metadata scans performed, full or resumed (test
+    * observability: an unchanged file must not re-scan). */
   private[sources] val metaScans = new java.util.concurrent.atomic.AtomicLong
 
+  /** Shard bytes read by metadata scans, boundary re-verification
+    * included (test observability: an append costs the appended bytes
+    * plus one boundary frame). */
+  private[sources] val metaBytesScanned =
+    new java.util.concurrent.atomic.AtomicLong
+
   private def shardMeta(f: File): ShardMeta = {
-    if (!f.exists()) return ShardMeta(0L, 0L, -1L, closed = false)
+    if (!f.exists()) return ShardMeta(0L, 0L, -1L, closed = false, NoMark)
     val key    = f.getAbsolutePath
     val mtime  = f.lastModified()
     val length = f.length()
@@ -298,68 +336,132 @@ object KinesisLikeLog {
     if (cached != null && cached.mtime == mtime && cached.length == length) cached
     else {
       metaScans.incrementAndGet()
-      val (mx, cl) = metaScan(f)
-      val fresh = ShardMeta(mtime, length, mx, cl)
+      val fresh =
+        if (f.getName.endsWith(FramedExtension))
+          scanFramed(f, mtime, length, Option(cached))
+        else {
+          val (mx, cl) = scanText(f)
+          metaBytesScanned.addAndGet(length)
+          ShardMeta(mtime, length, mx, cl, NoMark)
+        }
       metaCache.put(key, fresh)
       fresh
     }
   }
 
-  /** The (maxSeq, closed) fold itself — metadata-ONLY decode, because
-    * this scan runs on the DRIVER once per stream start per shard file
-    * (stream construction invalidates the cache; see [[invalidateMeta]])
-    * and the full event decode (Jackson tree, base64 strings, Record
-    * allocation) measured 250–600 ms per 16-shard scan at sf0.1, billed
-    * to every streaming lifecycle. The wire writes each envelope's
-    * continuation as its LAST record's sequence number and per-shard
-    * sequence is ascending, so max(record seq) == max(continuation):
-    * the framed branch parses only the envelope's continuation field
-    * ([[EventStreamFraming.decodeToMeta]]; CRCs still verified), the
-    * text branch reads only the seq prefix of each line. Equality with
-    * the full-decode fold is pinned by KinesisLikeSourceSpec. */
-  private def metaScan(f: File): (Long, Boolean) =
-    if (f.getName.endsWith(FramedExtension)) {
-      val in      = new FileInputStream(f)
+  /** The framed (maxSeq, closed, seek index) fold — metadata-ONLY
+    * decode, because this scan runs on the DRIVER (the full event decode
+    * — Jackson tree, base64 strings, Record allocation — measured
+    * 250–600 ms per 16-shard scan at sf0.1). The wire writes each
+    * envelope's continuation as its LAST record's sequence number and
+    * per-shard sequence is ascending, so max(record seq) ==
+    * max(continuation): only the continuation field is parsed
+    * ([[EventStreamFraming.decodeToMeta]]), and both CRCs of every frame
+    * are still verified. The fold continues `prev` from its mark's end
+    * when the file has not shrunk below it and the boundary frame still
+    * verifies with its recorded message CRC; otherwise (no entry, a
+    * shrunk or rewritten file) it starts cold at byte 0. Equality of the
+    * resumed fold, the cold fold and the full decode is pinned by
+    * KinesisLikeSourceSpec. */
+  private def scanFramed(
+      f: File, mtime: Long, length: Long, prev: Option[ShardMeta]): ShardMeta = {
+    val in = new FileInputStream(f)
+    try {
+      val base  = prev.filter(p => boundaryIntact(in.getChannel, p.mark))
+      val start = base.fold(0L)(_.mark.end)
+      in.getChannel.position(start)
+      var mx      = base.fold(-1L)(_.maxSeq)
+      var cl      = base.exists(_.closed)
+      var lastOff = base.fold(-1L)(_.mark.lastOff)
+      var lastCrc = base.fold(0)(_.mark.lastCrc)
+      val conts   = Array.newBuilder[Long]
+      val offsets = Array.newBuilder[Long]
+      base.foreach { b => conts.addAll(b.mark.conts); offsets.addAll(b.mark.offsets) }
+      var indexed = base.flatMap(_.mark.offsets.lastOption).getOrElse(0L)
+      var off     = start
       val decoder = new EventStreamFraming.FrameDecoder
       val chunk   = new Array[Byte](EventStreamFraming.ChunkBytes)
-      var mx      = -1L
-      var cl      = false
-      try {
-        var n = in.read(chunk)
-        while (n >= 0) {
-          decoder.feed(chunk, 0, n).foreach { msg =>
-            val (headers, payload) = EventStreamFraming.decodeMessage(msg)
-            EventStreamFraming.decodeToMeta(headers, payload) match {
-              case Some(Right(cont)) => if (cont > mx) mx = cont
-              case Some(Left(_))     => cl = true
-              case None              =>
-            }
+      var n = in.read(chunk)
+      while (n >= 0) {
+        decoder.feed(chunk, 0, n).foreach { msg =>
+          val (headers, payload) = EventStreamFraming.decodeMessage(msg)
+          val next = off + msg.length
+          EventStreamFraming.decodeToMeta(headers, payload) match {
+            case Some(Right(cont)) =>
+              if (cont > mx) mx = cont
+              if (next - indexed >= SeekStride) {
+                conts += mx; offsets += next; indexed = next
+              }
+            case Some(Left(_)) => cl = true
+            case None          =>
           }
-          n = in.read(chunk)
+          lastOff = off
+          lastCrc = EventStreamFraming.messageCrc(msg)
+          off = next
         }
-        require(!decoder.isMidFrame,
-          s"truncated event-stream frame at EOF in $f")
-      } finally in.close()
-      (mx, cl)
-    } else {
-      val in = new BufferedReader(
-        new InputStreamReader(new FileInputStream(f), UTF_8))
-      var mx = -1L
-      var cl = false
-      try {
-        var line = in.readLine()
-        while (line != null) {
-          if (line == ClosedMarker) cl = true
-          else if (line.nonEmpty && line.charAt(0) != '#') {
-            val tab = line.indexOf('\t')
-            val seq = (if (tab < 0) line else line.substring(0, tab)).toLong
-            if (seq > mx) mx = seq
-          }
-          line = in.readLine()
-        }
-      } finally in.close()
-      (mx, cl)
+        n = in.read(chunk)
+      }
+      require(!decoder.isMidFrame,
+        s"truncated event-stream frame at EOF in $f")
+      metaBytesScanned.addAndGet(off - start)
+      ShardMeta(mtime, length, mx, cl,
+        ScanMark(off, lastOff, lastCrc, conts.result(), offsets.result()))
+    } finally in.close()
+  }
+
+  /** True when the frame `m` recorded last still ends at `m.end`, passes
+    * both CRCs and carries the recorded message CRC — what lets a scan
+    * resume at `m.end` instead of byte 0. */
+  private def boundaryIntact(ch: java.nio.channels.FileChannel, m: ScanMark): Boolean =
+    m.lastOff >= 0 && ch.size() >= m.end && {
+      val buf = java.nio.ByteBuffer.allocate((m.end - m.lastOff).toInt)
+      while (buf.hasRemaining && ch.read(buf, m.lastOff + buf.position()) > 0) ()
+      metaBytesScanned.addAndGet(buf.position().toLong)
+      val msg = buf.array()
+      !buf.hasRemaining && EventStreamFraming.messageCrc(msg) == m.lastCrc &&
+        scala.util.Try(EventStreamFraming.decodeMessage(msg)).isSuccess
     }
+
+  /** The text (maxSeq, closed) fold: reads only the seq prefix of each
+    * line. */
+  private def scanText(f: File): (Long, Boolean) = {
+    val in = new BufferedReader(
+      new InputStreamReader(new FileInputStream(f), UTF_8))
+    var mx = -1L
+    var cl = false
+    try {
+      var line = in.readLine()
+      while (line != null) {
+        if (line == ClosedMarker) cl = true
+        else if (line.nonEmpty && line.charAt(0) != '#') {
+          val tab = line.indexOf('\t')
+          val seq = (if (tab < 0) line else line.substring(0, tab)).toLong
+          if (seq > mx) mx = seq
+        }
+        line = in.readLine()
+      }
+    } finally in.close()
+    (mx, cl)
+  }
+
+  /** Where a reader resuming after `cursor` may start reading `f`: the
+    * byte just past the last indexed Records event whose continuation is
+    * ≤ `cursor`, or 0 when there is none (always, for a text shard or a
+    * shard no scan has seen). Reads the cached index without re-scanning:
+    * the index names only frames a scan already verified, so on an
+    * append-only shard a cached entry stays valid as the file grows. */
+  def seekOffset(f: File, cursor: Long): Long = {
+    val m = metaCache.get(f.getAbsolutePath)
+    if (m == null) return 0L
+    val conts = m.mark.conts
+    var lo    = 0
+    var hi    = conts.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (conts(mid) <= cursor) lo = mid + 1 else hi = mid
+    }
+    if (lo == 0) 0L else m.mark.offsets(lo - 1)
+  }
 
   /** Drop cached shard metadata for every file under `logDir`. The
     * (mtime, length) cache key cannot see a shard file replaced with

@@ -134,8 +134,11 @@ object KinesisLikeStatus {
   * data(binary, base64-decoded payload per subscribe_to_shard.ex:365-366).
   *
   * Scale posture: readers stream their shard file executor-side (no
-  * driver materialization); driver-side work is metadata-only offset
-  * resolution per microbatch, like Kafka's listOffsets.
+  * driver materialization) and seek to a frame boundary near their
+  * cursor instead of decoding the shard from byte 0; driver-side work
+  * per microbatch is metadata-only offset resolution over the bytes
+  * appended since the last batch (O(appended bytes), not O(shard)),
+  * like Kafka's listOffsets.
   */
 class KinesisLikeProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "kinesislike"
@@ -419,7 +422,8 @@ class KinesisLikeMicroBatchStream(cfg: KinesisLikeConfig)
         cfg.logDir,
         cfg.failAtOpen.getOrElse(""),
         cfg.failAtOpenTimes,
-        cfg.faultRunId.getOrElse("")))
+        cfg.faultRunId.getOrElse(""),
+        KinesisLikeLog.seekOffset(f, after)))
     }.toArray
   }
 
@@ -448,6 +452,7 @@ final case class KinesisLikePartition(
     failAtOpen: String,
     failAtOpenTimes: Int,
     faultScope: String = "",
+    startByte: Long = 0L,
 ) extends InputPartition
 
 object KinesisLikeReaderFactory extends PartitionReaderFactory {
@@ -460,19 +465,27 @@ object KinesisLikeReaderFactory extends PartitionReaderFactory {
   * decoder (S9 subscribe_to_shard.ex:277-327, S10 329-341, S12
   * 343-366). Cursor logic runs at the reference's per-EVENT granularity
   * (handle_event advances the resume position once per
-  * SubscribeToShardEvent, covering ALL its records): a whole event
-  * whose continuation is ≤ the committed cursor is skipped without
-  * touching its records — the resubscribe-from-continuation fast path —
-  * and an event whose continuation passes the batch end is the last
-  * that can matter (per-shard order). The one engine-side seam: an
-  * admission cap (maxRecordsPerBatch) is sequence-space arithmetic and
-  * can land MID-event; the in-event (after, until] record filter then
-  * defers the remainder to the next microbatch, preserving exactly-once
-  * (spec-pinned) — a wire subscription never cuts mid-event, and
-  * neither does an uncapped replay. Record payloads decode from the
-  * envelope's base64 `Data` (S12); order within a shard is event order
-  * then in-event record order, preserving the reference's event-order
-  * guarantee (subscribe_to_shard.ex:157). */
+  * SubscribeToShardEvent, covering ALL its records). The reader
+  * resubscribes from the continuation (subscribe_to_shard.ex:205-220):
+  * it starts at the partition's `startByte`, just past an indexed
+  * Records event whose continuation is ≤ the committed cursor, so no
+  * event before it can hold an undelivered record, and the per-batch
+  * read is O(new data plus at most one index stride) rather than
+  * O(cursor). From there a whole event whose continuation is ≤ the
+  * cursor is skipped without touching its records, and an event whose
+  * continuation passes the batch end is the last that can matter
+  * (per-shard order). An in-stream error event is raised when the
+  * reader reaches it, so one before `startByte` — history before the
+  * subscription's start — is never raised, as on the wire. The one
+  * engine-side seam: an admission cap (maxRecordsPerBatch) is
+  * sequence-space arithmetic and can land MID-event; the in-event
+  * (after, until] record filter then defers the remainder to the next
+  * microbatch, preserving exactly-once (spec-pinned) — a wire
+  * subscription never cuts mid-event, and neither does an uncapped
+  * replay. Record payloads decode from the envelope's base64 `Data`
+  * (S12); order within a shard is event order then in-event record
+  * order, preserving the reference's event-order guarantee
+  * (subscribe_to_shard.ex:157). */
 class KinesisLikeReader(p: KinesisLikePartition)
     extends PartitionReader[InternalRow] {
 
@@ -486,9 +499,10 @@ class KinesisLikeReader(p: KinesisLikePartition)
 
   // Extension-dispatched: a `.elog` shard streams through the event-
   // stream frame reassembler (16 KB chunks, partial frames buffered —
-  // the S9 byte tier) and the Records-envelope decode (S12); a `.log`
-  // shard reads line-per-event; both yield the same event vocabulary.
-  private val in = KinesisLikeLog.openEvents(new File(p.path))
+  // the S9 byte tier) and the Records-envelope decode (S12) from
+  // `startByte`; a `.log` shard reads line-per-event from byte 0; both
+  // yield the same event vocabulary.
+  private val in = KinesisLikeLog.openEvents(new File(p.path), p.startByte)
   private var row: InternalRow = _
   private var delivered        = 0L
   private var exhausted        = false

@@ -786,4 +786,237 @@ class KinesisLikeSourceSpec extends SparkSpec {
         dir.toString, StartingPosition.TrimHorizon, None, None))
     assert(KinesisLikeLog.maxSeq(f) == 7L)
   }
+
+  // ------------------------------------------------ seeking readers
+
+  private def b64(s: String): String =
+    java.util.Base64.getEncoder.encodeToString(s.getBytes(UTF_8))
+
+  /** A record line whose ~150-byte payload puts a 64 KB seek stride
+    * every ~190 records; `fill` varies the payload at a fixed length. */
+  private def recLine(seq: Long, fill: Char = 'p'): String =
+    s"$seq\t${seq * 1000L}\tk${seq % 7}\t${b64(fill.toString * 150 + seq)}"
+
+  private def writeFramed(
+      f: java.io.File, lines: Seq[String], append: Boolean = false): Unit = {
+    val sink = KinesisLikeLog.openLineSink(f, append = append)
+    try lines.foreach(sink.writeLine) finally sink.close()
+  }
+
+  /** Byte offsets at which the frames of a framed shard end. */
+  private def frameEnds(bytes: Array[Byte]): Seq[Int] = {
+    val ends = scala.collection.mutable.ArrayBuffer.empty[Int]
+    var off  = 0
+    while (off + 4 <= bytes.length) {
+      off += java.nio.ByteBuffer.wrap(bytes, off, 4).getInt
+      ends += off
+    }
+    ends.toSeq
+  }
+
+  /** Every row one reader delivers: (seq, arrival, key, data). */
+  private def readRows(
+      f: java.io.File, after: Long, until: Long, startByte: Long,
+      scope: String = ""): Seq[(Long, Long, String, Seq[Byte])] = {
+    val r = new graft.sources.kinesislike.KinesisLikeReader(
+      graft.sources.kinesislike.KinesisLikePartition(
+        "shard-00000", f.getAbsolutePath, after, until, failOnceAfter = -1L,
+        markerDir = f.getParent, failAtOpen = "", failAtOpenTimes = 1,
+        faultScope = scope, startByte = startByte))
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, String, Seq[Byte])]
+    try while (r.next()) {
+      val row = r.get()
+      out += ((row.getUTF8String(1).toString.toLong, row.getLong(2),
+        row.getUTF8String(3).toString, row.getBinary(4).toSeq))
+    } finally r.close()
+    out.toSeq
+  }
+
+  /** The seek index as a step function of the cursor. */
+  private def seekSteps(f: java.io.File, upTo: Long): Seq[Long] =
+    (-1L to upTo + 1).map(KinesisLikeLog.seekOffset(f, _))
+
+  test("a reader seeking to the index's startByte returns exactly the " +
+    "rows of a byte-0 read: multi-record envelopes, mid-event cursors, a " +
+    "duplicate seq at a batch seam, the closed marker") {
+    import org.apache.spark.sql.connector.read.streaming.ReadLimit
+    val dir = tmpDir("kl_seek")
+    val f   = dir.resolve("shard-00000.elog").toFile
+    // Every record twice (at-least-once redelivery), three lines per
+    // envelope: envelopes [0,0,1] [1,2,2] [3,3,4] … so half of them open
+    // with a duplicate of the previous envelope's continuation.
+    writeFramed(f,
+      (0L until 1500L).flatMap(i => Seq(recLine(i), recLine(i))) :+
+        KinesisLikeLog.ClosedMarker)
+    assert(KinesisLikeLog.shardFile(dir.toString, "shard-00000") == f,
+      "shardFile resolves the framed file of a framed dir")
+    assert(KinesisLikeLog.maxSeq(
+      KinesisLikeLog.shardFile(dir.toString, "shard-00000")) == 1499L)
+    val steps = seekSteps(f, 1499L)
+    val conts = (0L to 1499L).filter(c => steps(c.toInt + 1) != steps(c.toInt))
+    assert(conts.size >= 10, s"expected a populated seek index, got $conts")
+    val cursors = (conts.flatMap(c => Seq(c - 1, c, c + 1)) ++
+      Seq(-1L, 0L, 1498L, 1499L)).distinct.sorted
+    for (after <- cursors; until <- Seq(after + 1, after + 5, Long.MaxValue)) {
+      val start = KinesisLikeLog.seekOffset(f, after)
+      assert(readRows(f, after, until, start) == readRows(f, after, until, 0L),
+        s"seek diverged for ($after, $until] from byte $start")
+    }
+    // A batch seam at an indexed continuation: (…, c] then (c, …] — the
+    // batch ending at c takes both copies of c even when the second opens
+    // the next envelope, and the next batch, seeking, takes neither.
+    conts.take(4).foreach { c =>
+      val first  = readRows(f, c - 10, c, KinesisLikeLog.seekOffset(f, c - 10))
+      val second = readRows(f, c, c + 10, KinesisLikeLog.seekOffset(f, c))
+      assert(first.count(_._1 == c) == 2 && !second.exists(_._1 == c))
+      assert(first ++ second == readRows(f, c - 10, c + 10, 0L))
+    }
+    // planInputPartitions hands the reader that offset.
+    val stream = new graft.sources.kinesislike.KinesisLikeMicroBatchStream(
+      graft.sources.kinesislike.KinesisLikeConfig(
+        dir.toString, StartingPosition.TrimHorizon, None, None))
+    val from = KinesisLikeOffset(Map("shard-00000" -> 1000L))
+    val parts = stream.planInputPartitions(from,
+      stream.latestOffset(from, ReadLimit.allAvailable()))
+    val p = parts.head.asInstanceOf[graft.sources.kinesislike.KinesisLikePartition]
+    assert(p.startByte > 0L && p.startByte == KinesisLikeLog.seekOffset(f, 1000L))
+  }
+
+  test("a seeking reader raises an in-stream error just past its cursor " +
+    "with the same label and budget use, and fails a corrupt or truncated " +
+    "frame exactly like a byte-0 read") {
+    val dir = tmpDir("kl_seek_fail")
+    val f   = dir.resolve("shard-00000.elog").toFile
+    writeFramed(f, (0L until 800L).map(recLine(_)) ++
+      Seq(s"${KinesisLikeLog.ErrorMarker}\thttp_error:500\t1") ++
+      (800L until 1000L).map(recLine(_)) :+ KinesisLikeLog.ClosedMarker)
+    assert(KinesisLikeLog.maxSeq(f) == 999L)
+    val start = KinesisLikeLog.seekOffset(f, 799L)
+    assert(start > 0L)
+    def marker(scope: String) = dir.resolve(s"_INSTREAM_RAISED_shard-00000_$scope")
+    val bySeek = intercept[RuntimeException](readRows(f, 799L, 900L, start, "seek"))
+    val byFull = intercept[RuntimeException](readRows(f, 799L, 900L, 0L, "full"))
+    assert(bySeek.getClass == byFull.getClass &&
+      bySeek.getMessage == byFull.getMessage)
+    assert(graft.sources.kinesislike.KinesisLikeErrors.classify(bySeek) == "http_error")
+    // The budget is spent once either way, and the retry passes the frame.
+    assert(readRows(f, 799L, 900L, start, "seek") ==
+      readRows(f, 799L, 900L, 0L, "full"))
+    assert(Files.readAllLines(marker("seek")) == Files.readAllLines(marker("full")))
+    assert(Files.readAllLines(marker("seek")).size == 1)
+
+    // Damage the last frame (the closed marker) after the index was built:
+    // both reads reach it and fail the same way (their error budgets are
+    // spent, so the byte-0 read passes the error frame).
+    val clean = Files.readAllBytes(f.toPath)
+    val tail  = KinesisLikeLog.seekOffset(f, 999L)
+    assert(tail > 0L)
+    def failures(): (String, String) = {
+      def read(start: Long, scope: String) =
+        intercept[IllegalArgumentException](
+          readRows(f, 998L, Long.MaxValue, start, scope)).getMessage
+      (read(tail, "seek"), read(0L, "full"))
+    }
+    val flipped = clean.clone()
+    flipped(clean.length - 20) = (flipped(clean.length - 20) ^ 0x01).toByte
+    Files.write(f.toPath, flipped)
+    val (crcSeek, crcFull) = failures()
+    assert(crcSeek == crcFull && crcSeek.contains("CRC mismatch"))
+    Files.write(f.toPath, clean.take(clean.length - 10))
+    val (cutSeek, cutFull) = failures()
+    assert(cutSeek == cutFull &&
+      cutSeek.contains("truncated event-stream frame at EOF"))
+  }
+
+  test("a subscription starting past an unspent history error frame does " +
+    "not raise it — Kinesis never delivers what precedes the start — " +
+    "while a byte-0 read of the same cursor would") {
+    val dir = tmpDir("kl_seek_history")
+    val f   = dir.resolve("shard-00000.elog").toFile
+    writeFramed(f, (0L until 200L).map(recLine(_)) ++
+      Seq(s"${KinesisLikeLog.ErrorMarker}\ttransport_closed\t1") ++
+      (200L until 1000L).map(recLine(_)) :+ KinesisLikeLog.ClosedMarker)
+    val got = runStream(dir, "after_sequence_number:900",
+      tmpDir("kl_seek_history_ck"), "sink_seek_history")
+    assert(got.map(_._2).sorted == (901L until 1000L))
+    assert(!Files.exists(dir.resolve("_INSTREAM_RAISED_shard-00000")))
+    // The unseeked reader still passes the frame and spends the budget.
+    intercept[graft.sources.kinesislike.KinesisLikeErrors.TransportClosedException](
+      readRows(f, 900L, Long.MaxValue, 0L))
+  }
+
+  test("incremental shard metadata: after each append, maxSeq, isClosed " +
+    "and the seek index equal a cold full scan, and the scan reads only " +
+    "the appended bytes plus one boundary frame") {
+    val dir = tmpDir("kl_meta_incr")
+    val f   = dir.resolve("shard-00000.elog").toFile
+    def state() = {
+      val mx = KinesisLikeLog.maxSeq(f)
+      (mx, KinesisLikeLog.isClosed(f), seekSteps(f, mx))
+    }
+    def cold() = { KinesisLikeLog.invalidateMeta(dir.toString); state() }
+    writeFramed(f, (0L until 400L).map(recLine(_)))
+    assert(state() == cold())
+    val appends = Seq(
+      (400L until 410L).map(recLine(_)),  // within one stride
+      (410L until 800L).map(recLine(_)),  // across several
+      Seq(s"${KinesisLikeLog.ErrorMarker}\ttransport_closed\t1"),
+      (800L until 830L).map(recLine(_)),
+      Seq(KinesisLikeLog.ClosedMarker))
+    appends.foreach { lines =>
+      val before   = Files.readAllBytes(f.toPath)
+      val ends     = frameEnds(before)
+      val boundary = ends.last - ends.init.lastOption.getOrElse(0)
+      writeFramed(f, lines, append = true)
+      val appended = f.length - before.length
+      val bytes0   = KinesisLikeLog.metaBytesScanned.get()
+      val warm     = state()
+      assert(KinesisLikeLog.metaBytesScanned.get() - bytes0 == appended + boundary)
+      assert(warm == cold())
+    }
+    assert(state()._1 == 829L && state()._2)
+  }
+
+  test("incremental shard metadata falls back safely: a truncated tail " +
+    "still fails, a shrunk file and a rewritten prefix re-scan in full") {
+    val dir = tmpDir("kl_meta_fallback")
+    val f   = dir.resolve("shard-00000.elog").toFile
+    def state() = {
+      val mx = KinesisLikeLog.maxSeq(f)
+      (mx, KinesisLikeLog.isClosed(f), seekSteps(f, mx))
+    }
+    def cold() = { KinesisLikeLog.invalidateMeta(dir.toString); state() }
+    /** Bytes the next metadata read scans, and its result. */
+    def scanned(): (Long, (Long, Boolean, Seq[Long])) = {
+      val bytes0 = KinesisLikeLog.metaBytesScanned.get()
+      val s      = state()
+      (KinesisLikeLog.metaBytesScanned.get() - bytes0, s)
+    }
+    writeFramed(f, (0L until 300L).map(recLine(_)))
+    assert(KinesisLikeLog.maxSeq(f) == 299L)
+    val whole = Files.readAllBytes(f.toPath)
+    val ends  = frameEnds(whole)
+    val lastFrame = ends.last - ends(ends.size - 2)
+
+    // Truncated tail: half of one more frame.
+    val half = EventStreamFraming.encodeLine(recLine(300L))
+    Files.write(f.toPath, half.take(half.length / 2), StandardOpenOption.APPEND)
+    val e = intercept[IllegalArgumentException](KinesisLikeLog.maxSeq(f))
+    assert(e.getMessage.contains("truncated event-stream frame at EOF"))
+
+    // Rewritten prefix: same frame layout, but the boundary event's
+    // payloads changed, then more records — its CRC no longer matches.
+    writeFramed(f, (0L until 297L).map(recLine(_)) ++
+      (297L until 300L).map(recLine(_, 'q')) ++ (300L until 310L).map(recLine(_)))
+    assert(frameEnds(Files.readAllBytes(f.toPath)).contains(whole.length))
+    val (rewritten, afterRewrite) = scanned()
+    assert(rewritten == lastFrame + f.length, "the rewrite must re-scan in full")
+    assert(afterRewrite == cold())
+
+    // Shrunk: cut back to a prefix of whole frames.
+    Files.write(f.toPath, whole.take(ends(ends.size / 2)))
+    val (shrunk, afterShrink) = scanned()
+    assert(shrunk == f.length, "a shrunk file must re-scan in full")
+    assert(afterShrink == cold())
+  }
 }
